@@ -28,9 +28,6 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
 )
 from big_data_instacart_market_basket_analysis_spark.ml import models as _ml
 from big_data_instacart_market_basket_analysis_spark.operators import (
-    _staging,
-)
-from big_data_instacart_market_basket_analysis_spark.operators import (
     analytics as _ana,
 )
 from big_data_instacart_market_basket_analysis_spark.operators import (
@@ -554,49 +551,19 @@ def q_prefixspan_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: one DataFrame IDENTITY per (session, sf_dir): the dedup operators
-#: memoize staged shingles / cluster labels by input-object identity,
-#: so handing every query the same object lets e.g. corpus_prep reuse
-#: the fixpoint dedup_clusters already computed in this session.
-#: (r9: the identity cache now lives in loaders.load_table itself.)
-def _read_once(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    # load_table memoizes the handle per (session, sf_dir, table) —
-    # one shared identity for the whole engine, so id()-keyed staging
-    # hits regardless of which path a query came in through.
-    return load_table(spark, sf_dir, table)
-
-
+#: load_table stages one handle per (session, sf_dir, table), so every
+#: query gets the same input object and the operators' input-owned
+#: staging (shingles, cluster labels, edge lists) hits across queries.
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _read_once(spark, sf_dir, "documents")
+    return load_table(spark, sf_dir, "documents")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _read_once(spark, sf_dir, "embeddings")
+    return load_table(spark, sf_dir, "embeddings")
 
 
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identity-stable lineitem: the graph operators stage the
-    co-purchase edge list by input identity, so warm invocations in
-    the same session reuse the materialized self-join."""
-    return _read_once(spark, sf_dir, "lineitem")
-
-
-_EVENTS_CACHE: dict[tuple[int, str], tuple] = {}
-
-
-def _events_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identity-stable events (load_table incl. ts normalization, one
-    object per session+sf_dir): the clustering operators stage the
-    quantized point table and eps-neighbor pairs by input identity,
-    so dbscan and the density-outlier query share one
-    materialization."""
-    return _staging.stage(
-        _EVENTS_CACHE,
-        (id(spark), sf_dir),
-        spark,
-        lambda: load_table(spark, sf_dir, "events"),
-        checkpoint=False,
-    )
+    return load_table(spark, sf_dir, "lineitem")
 
 
 def q_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,24 +936,24 @@ def q_events_permutation_test(
 def q_events_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA control chart of daily purchase revenue: fold-replayed
     z/limits recursions (no pow()), time-varying 3-sigma bands."""
-    return _tmp.ewma_chart(_events_stable(spark, sf_dir))
+    return _tmp.ewma_chart(load_table(spark, sf_dir, "events"))
 
 
 def q_events_mk_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hirsch-Slack seasonal Mann-Kendall: within-weekday pair signs,
     tie-corrected variance, continuity-corrected z."""
-    return _tmp.seasonal_mann_kendall(_events_stable(spark, sf_dir))
+    return _tmp.seasonal_mann_kendall(load_table(spark, sf_dir, "events"))
 
 
 def q_events_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilson 95% score interval per event type's user-reach share."""
-    return _tmp.wilson_ci(_events_stable(spark, sf_dir))
+    return _tmp.wilson_ci(load_table(spark, sf_dir, "events"))
 
 
 def q_events_nb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Negative-binomial MoM fit of per-user purchase counts (zeros
     included): r = m^2/(v-m), p = m/v; NULL when not overdispersed."""
-    return _tmp.nb_fit(_events_stable(spark, sf_dir))
+    return _tmp.nb_fit(load_table(spark, sf_dir, "events"))
 
 
 def q_orders_gamma_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,7 +1028,7 @@ def q_ml_cart_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         trees as _trees,
     )
 
-    return _trees.cart_train_staged(_events_stable(spark, sf_dir))
+    return _trees.cart_train_staged(load_table(spark, sf_dir, "events"))
 
 
 def q_ml_rf_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1071,19 +1038,21 @@ def q_ml_rf_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         trees as _trees,
     )
 
-    return _trees.rf_train(_events_stable(spark, sf_dir))
+    return _trees.rf_train(load_table(spark, sf_dir, "events"))
 
 
 def q_ml_gbm_perm_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Permutation importance for the verified GBM (deterministic
     md5 rank-rotation shuffle, exact SSE deltas)."""
-    return _trees.gbm_permutation_importance(_events_stable(spark, sf_dir))
+    return _trees.gbm_permutation_importance(
+        load_table(spark, sf_dir, "events")
+    )
 
 
 def q_ml_cart_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-gain feature importance derived from the verified CART
     model table (explainability as a query)."""
-    return _trees.cart_feature_importance(_events_stable(spark, sf_dir))
+    return _trees.cart_feature_importance(load_table(spark, sf_dir, "events"))
 
 
 def q_events_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,7 +1067,7 @@ def q_events_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ml_gbm_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified gradient boosting: depth-1 stumps on integer-scaled
     residuals; per-round split/leaves/SSE hash-verified."""
-    return _trees.gbm_train_staged(_events_stable(spark, sf_dir))
+    return _trees.gbm_train_staged(load_table(spark, sf_dir, "events"))
 
 
 def q_events_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1703,7 +1672,7 @@ def q_plan_lint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "product_features": lambda: _feat.product_features(t),
         "users_final": lambda: _feat.users_final(t),
         "events_sessionize": lambda: _ev.sessionize(
-            _events_stable(spark, sf_dir)
+            load_table(spark, sf_dir, "events")
         ),
         "ann_brute_force": lambda: _sim.brute_force_topk(
             _emb(spark, sf_dir)
@@ -1726,13 +1695,13 @@ def q_plan_lint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rule catches only the bounded #partitions-row offsets table,
         # if anything)
         "events_spend_deciles": lambda: _tmp.user_spend_deciles(
-            _events_stable(spark, sf_dir)
+            load_table(spark, sf_dir, "events")
         ),
         "events_rfm_segments": lambda: _tmp.rfm_segments(
-            _events_stable(spark, sf_dir)
+            load_table(spark, sf_dir, "events")
         ),
         "ml_rf_verified": lambda: _trees.rf_train(
-            _events_stable(spark, sf_dir)
+            load_table(spark, sf_dir, "events")
         ),
     }
     # the nine builders are independent construction work — mostly
@@ -1741,7 +1710,7 @@ def q_plan_lint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # preserved, so the report rows are byte-identical to the serial
     # build. Staged inputs are materialized up front (single-threaded)
     # so concurrent builders never race a staging cache miss.
-    _events_stable(spark, sf_dir)
+    load_table(spark, sf_dir, "events")
     _emb(spark, sf_dir)
     _docs(spark, sf_dir)
     names = list(builders)
@@ -2431,14 +2400,14 @@ def q_events_vonmises(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Von Mises concentration of purchase hours: mean resultant
     length + Fisher's closed-form kappa from shared trig literals —
     the fit half of the circular shelf beside the Rayleigh test."""
-    return _tmp.vonmises_fit(_events_stable(spark, sf_dir))
+    return _tmp.vonmises_fit(load_table(spark, sf_dir, "events"))
 
 
 def q_events_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-3 permutation entropy of daily event counts: stable-rank
     ordinal patterns over the gap-filled calendar, ln-of-exact-integer
     entropy — the model-free predictability number."""
-    return _tmp.permutation_entropy(_events_stable(spark, sf_dir))
+    return _tmp.permutation_entropy(load_table(spark, sf_dir, "events"))
 
 
 def q_events_sample_entropy(
@@ -2446,7 +2415,7 @@ def q_events_sample_entropy(
 ) -> DataFrame:
     """SampEn(m=2, r=mean/5) of daily counts — integer template
     matching over the bounded calendar, one ln at the end."""
-    return _tmp.sample_entropy(_events_stable(spark, sf_dir))
+    return _tmp.sample_entropy(load_table(spark, sf_dir, "events"))
 
 
 def q_embedding_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2460,7 +2429,7 @@ def q_events_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer Viterbi (quantized Poisson cost difference, shared ln B
     literal) folded over the packed calendar array; recursive-CTE
     oracle replays the identical automaton."""
-    return _tmp.burst_detection(_events_stable(spark, sf_dir))
+    return _tmp.burst_detection(load_table(spark, sf_dir, "events"))
 
 
 def q_embedding_intrinsic_dim(
@@ -2482,48 +2451,48 @@ def q_events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean-centered, gap-filled day series; packed same-IEEE trig
     folds — retires the r6/r7 DFT deferral via the Rayleigh
     protocol)."""
-    return _tmp.periodogram_daily(_events_stable(spark, sf_dir))
+    return _tmp.periodogram_daily(load_table(spark, sf_dir, "events"))
 
 
 def q_events_lru_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user capacity-k LRU hit-rate curve (k in 1,2,4,8): exact
     integer array fold per user, recursive-CTE oracle replay."""
-    return _tmp.lru_hitrate(_events_stable(spark, sf_dir))
+    return _tmp.lru_hitrate(load_table(spark, sf_dir, "events"))
 
 
 def q_events_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HBOS top-20 outliers: three bounded-grain histograms
     (hour/dow/value-octave), score = 3 ln N - ln(n_h n_d n_v) — the
     no-pairwise-structure outlier screen."""
-    return _tmp.hbos_outliers(_events_stable(spark, sf_dir))
+    return _tmp.hbos_outliers(load_table(spark, sf_dir, "events"))
 
 
 def q_events_yuen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yuen's 20%-trimmed-mean two-sample test (purchase vs click
     values): exact cent-grain order statistics via the octave prefix
     kernel; only the final t/df chain divides."""
-    return _tmp.yuen_trimmed_test(_events_stable(spark, sf_dir))
+    return _tmp.yuen_trimmed_test(load_table(spark, sf_dir, "events"))
 
 
 def q_events_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V effect size for the event_type × day-of-week
     association: full zero-filled contingency grid, integral chi2
     numerators, V = sqrt(chi2 / (n·k))."""
-    return _tmp.cramers_v(_events_stable(spark, sf_dir))
+    return _tmp.cramers_v(load_table(spark, sf_dir, "events"))
 
 
 def q_events_tost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOST mean-equivalence of purchase vs click values (two
     one-sided Welch z-tests against a ±10%·mean margin) — the
     statistically sound 'no change' claim."""
-    return _tmp.tost_equivalence(_events_stable(spark, sf_dir))
+    return _tmp.tost_equivalence(load_table(spark, sf_dir, "events"))
 
 
 def q_events_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mantel-Haenszel pooled odds ratio + chi-square of weekend
     exposure on purchase-vs-click odds across six-hour strata —
     the Simpson's-paradox-safe stratified 2x2 summary."""
-    return _tmp.mantel_haenszel(_events_stable(spark, sf_dir))
+    return _tmp.mantel_haenszel(load_table(spark, sf_dir, "events"))
 
 
 
@@ -2972,7 +2941,7 @@ def q_events_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-blocked weighted DBSCAN over (user, dow) activity points;
     oracle replays the textbook quadratic epsilon-join + recursive
     closure — hash match proves grid blocking is lossless."""
-    return _clu.dbscan_clusters(_events_stable(spark, sf_dir))
+    return _clu.dbscan_clusters(load_table(spark, sf_dir, "events"))
 
 
 def q_events_density_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2980,7 +2949,7 @@ def q_events_density_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DBSCAN grid): integer density ratios, cross-multiplied 3/2
     flag; oracle replays the quadratic eps-join."""
     return _clu.relative_density_outliers(
-        _events_stable(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
     )
 
 

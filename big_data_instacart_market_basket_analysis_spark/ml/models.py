@@ -33,6 +33,7 @@ from pyspark.ml.regression import (
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators._staging import stage
 from ..operators.candidates import FEATURE_COLS, candidates_staged
 from ..operators.submission import THRESHOLD, submission
 from ..plans.instacart import EVAL_TEST, EVAL_TRAIN, InstacartTables
@@ -88,22 +89,20 @@ def binarize(scored: DataFrame, score_col: str = "prediction") -> DataFrame:
     )
 
 
-#: assembled candidate features, persisted once per InstacartTables
-#: instance (instacart_tables memoizes t per session, so the three
-#: per-model submission queries and train_metrics all share ONE cache
-#: entry instead of leaking one per call).
-_ASSEMBLED_CACHE: dict[int, DataFrame] = {}
-
-
 def _assembled(t: InstacartTables) -> DataFrame:
-    key = id(t.orders)
-    if key not in _ASSEMBLED_CACHE:
-        from pyspark import StorageLevel
+    """Assembled candidate features, persisted once per tables instance
+    (instacart_tables stages t per session, so the three per-model
+    submission queries and train_metrics all share ONE entry)."""
+    from pyspark import StorageLevel
 
-        _ASSEMBLED_CACHE[key] = assemble(candidates_staged(t)).persist(
+    return stage(
+        "ml_assembled",
+        t,
+        (),
+        lambda: assemble(candidates_staged(t)).persist(
             StorageLevel.MEMORY_AND_DISK
-        )
-    return _ASSEMBLED_CACHE[key]
+        ),
+    )
 
 
 def _weighted_prf(tp: int, fp: int, tn: int, fn: int) -> tuple[float, float, float]:

@@ -1,39 +1,51 @@
-"""Session staging with eviction (r7 ADVICE item 3).
+"""The session staging registry: every shared intermediate the engine
+builds once and reuses (checkpointed tables, learned vocabularies,
+loaded table handles, round-tripped scratch copies, per-session conf
+memos) goes through ``stage``. The contract, stated once here:
 
-The id()-keyed staging caches (clustering's point/neighbor/core-label
-chain, similarity's brute-force truth, the entry module's stable
-events handle) pin the input DataFrame plus an eagerly
-localCheckpointed result so every same-session consumer reuses one
-materialization. Keeping the input reference is load-bearing (it
-stabilizes ``id()`` against CPython reuse), but an unbounded dict
-makes eviction impossible: a long-lived driver that processes many
-inputs accumulates checkpoint blocks for process lifetime.
+- **Named.** Each artifact ``name`` has its own dict, keyed by
+  ``(id(owner), params)``.
+- **Owner held.** An entry stores ``(owner, value)``. ``owner`` is the
+  object whose identity scopes the artifact: the input DataFrame, or
+  the SparkSession for per-session handles. Holding it keeps the
+  owner alive, so its ``id()`` cannot be recycled while the entry
+  lives.
+- **Identity-checked hit.** A lookup hits only when the stored owner
+  ``is`` the caller's owner; anything else rebuilds and replaces.
+- **Two-generation eviction.** On a miss, each name keeps at most
+  ``KEEP_OWNERS`` owner generations: the incoming owner plus the most
+  recent other one, by first-touch order. Two live inputs used in
+  alternation (the entry module's events interleaved with a
+  test-local frame) stay warm. Older generations are dropped, which
+  releases their checkpointed DataFrames to GC, and Spark's
+  ContextCleaner then frees the blocks. All variants (``params``) for
+  a kept owner stay.
+- **One lock.** Every lookup and build runs under ``STAGING_LOCK``.
 
-``stage`` keeps the convention and adds the eviction hook: when a NEW
-input identity arrives, every entry owned by a DIFFERENT input is
-dropped first. Dropping the Python references releases the
-checkpointed DataFrame to GC, which is exactly how localCheckpoint
-blocks are reclaimed (Spark's ContextCleaner unpersists the backing
-RDD once the last reference dies) — so a superseded input's blocks are
-freed instead of pinned forever, while all variants for the CURRENT
-input (e.g. brute-force truth at several (n_queries, k)) stay warm.
+``build`` returns exactly the value to hold and does its own
+materialization (``localCheckpoint(eager=True)``, ``persist``, a
+scratch write). This module imports nothing from the package, so
+sources, plans and streaming can use it without an import cycle.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Callable
+from typing import Any, Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-#: One process-wide re-entrant lock for every id()-keyed staging
-#: cache (this module's `stage`, plus the direct-dict helpers in
-#: similarity/trees). Staging helpers are reachable from thread pools
-#: (the plan-lint builders, guide §2.6); without the lock two threads
-#: missing the same key both run the eager-checkpoint build and store
-#: divergent staged identities. RLock because a build() may itself
-#: stage a nested table (e.g. GANN topk -> assignment).
+#: Staging is reachable from thread pools (the plan-lint builders):
+#: without the lock two threads missing the same key both run the
+#: eager build and store divergent staged identities. Re-entrant
+#: because a build may itself stage a nested artifact (e.g. GANN
+#: topk -> assignment).
 STAGING_LOCK = threading.RLock()
+
+KEEP_OWNERS = 2
+
+#: name -> {(id(owner), params): (owner, value)}
+_REGISTRY: dict[str, dict[tuple, tuple]] = {}
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -56,60 +68,23 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 
-def stage(
-    cache: dict,
-    key,
-    owner,
-    build: Callable[[], DataFrame],
-    checkpoint: bool = True,
-    keep_owners: int = 2,
-) -> DataFrame:
-    """Return the staged result for ``key``, building (and eagerly
-    localCheckpointing, unless ``checkpoint=False``) on first touch.
-
-    ``owner`` is the object whose identity scopes the entry (the input
-    DataFrame, or the SparkSession for per-session handles). On a miss
-    the cache is trimmed so at most ``keep_owners`` input-identity
-    generations survive (the incoming one plus the most recent
-    ``keep_owners - 1`` others, by first-touch order). Keeping one
-    spare generation means two live inputs used in alternation within
-    a session (e.g. the entry module's stable events interleaved with
-    a test-local events frame) stay warm instead of thrashing each
-    other's eager localCheckpoints on every switch (r8 ADVICE item 4),
-    while superseded generations beyond that are still released to GC
-    so their checkpoint blocks are reclaimed.
-    """
+def stage(name: str, owner, params: Hashable, build: Callable[[], Any]):
+    """Return artifact ``name`` for ``(owner, params)``, running
+    ``build()`` on first touch (see the module docstring)."""
     with STAGING_LOCK:
-        return _stage_locked(cache, key, owner, build, checkpoint, keep_owners)
-
-
-def _stage_locked(
-    cache: dict,
-    key,
-    owner,
-    build: Callable[[], DataFrame],
-    checkpoint: bool,
-    keep_owners: int,
-) -> DataFrame:
-    hit = cache.get(key)
-    if hit is None:
-        # distinct owner generations, oldest-first (dict order = first
-        # touch); evict everything older than the keep_owners-1 most
-        # recent generations besides the incoming owner.
-        owners: list = []
-        for v in cache.values():
-            if all(v[0] is not o for o in owners):
-                owners.append(v[0])
-        others = [o for o in owners if o is not owner]
-        evict = others[: max(0, len(others) - (keep_owners - 1))]
-        stale = [
-            k for k, v in cache.items() if any(v[0] is o for o in evict)
-        ]
-        for k in stale:
-            del cache[k]
-        df = build()
-        if checkpoint:
-            df = df.localCheckpoint(eager=True)
-        hit = (owner, df)
-        cache[key] = hit
-    return hit[1]
+        cache = _REGISTRY.setdefault(name, {})
+        key = (id(owner), params)
+        hit = cache.get(key)
+        if hit is not None and hit[0] is owner:
+            return hit[1]
+        owners: list = []  # distinct generations, oldest first
+        for o, _ in cache.values():
+            if o is not owner and all(o is not p for p in owners):
+                owners.append(o)
+        evict = owners[: max(0, len(owners) - (KEEP_OWNERS - 1))]
+        for k, (o, _) in list(cache.items()):
+            if any(o is e for e in evict):
+                del cache[k]
+        value = build()
+        cache[key] = (owner, value)
+        return value

@@ -75,29 +75,29 @@ def _points(events: DataFrame) -> DataFrame:
     )
 
 
-#: session staging (the graph family's _EDGES_CACHE pattern, r6
-#: verdict task 3): the quantized point table and the 3x3-cell
-#: epsilon-neighbor pair list are each materialized once per input
-#: identity and shared by dbscan_clusters (which reads the pair list
+#: session staging (r6 verdict task 3): the quantized point table and
+#: the 3x3-cell epsilon-neighbor pair list are each materialized once
+#: per input and shared by dbscan_clusters (which reads the pair list
 #: three times: core test, core-core edges, border attach) and
 #: relative_density_outliers. At cluster scale these become staged
 #: tables / reliable checkpoints instead of localCheckpoint.
-_POINTS_CACHE: dict[int, tuple] = {}
-_NBR_CACHE: dict[int, tuple] = {}
-
-
 def _points_staged(events: DataFrame) -> DataFrame:
     return _stage(
-        _POINTS_CACHE, id(events), events, lambda: _points(events)
+        "dbscan_points",
+        events,
+        (),
+        lambda: _points(events).localCheckpoint(eager=True),
     )
 
 
 def _neighbor_pairs_staged(events: DataFrame) -> DataFrame:
     return _stage(
-        _NBR_CACHE,
-        id(events),
+        "dbscan_neighbor_pairs",
         events,
-        lambda: _neighbor_pairs(_points_staged(events)),
+        (),
+        lambda: _neighbor_pairs(_points_staged(events)).localCheckpoint(
+            eager=True
+        ),
     )
 
 
@@ -152,19 +152,18 @@ def _neighbor_pairs(pts: DataFrame) -> DataFrame:
     )
 
 
-#: converged core cluster labels per input identity — the CC loop is
-#: the query's dominant cost (driver-coordinated star-contraction
-#: rounds), and the labels are the canonical reusable session state
-#: of a density clustering: incremental DBSCAN attaches new points to
-#: THESE labels, and any downstream segment/outlier consumer reads
-#: them. Same staging convention as graph._BETWEENNESS_CACHE; at
-#: cluster scale this is the materialized labels table.
-_CORE_LABELS_CACHE: dict[int, tuple] = {}
-
-
+#: converged core cluster labels per input — the CC loop is the
+#: query's dominant cost (driver-coordinated star-contraction rounds),
+#: and the labels are the canonical reusable session state of a density
+#: clustering: incremental DBSCAN attaches new points to THESE labels,
+#: and any downstream segment/outlier consumer reads them. At cluster
+#: scale this is the materialized labels table.
 def _core_labels_staged(events: DataFrame) -> DataFrame:
     return _stage(
-        _CORE_LABELS_CACHE, id(events), events, lambda: _core_labels(events)
+        "dbscan_core_labels",
+        events,
+        (),
+        lambda: _core_labels(events).localCheckpoint(eager=True),
     )
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._staging import stage as _stage
+
 #: rank scale (millionths), damping as integer percent, supersteps.
 PR_SCALE = 1_000_000
 PR_DAMP_PCT = 85
@@ -51,27 +53,20 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     )
 
 
-#: distinct directed co-purchase edge list per lineitem DataFrame,
-#: session-staged by input identity — shared by PageRank (both edge
-#: directions) and triangle counting (the a<b orientation is a cheap
-#: filter of the stage). Same convention as similarity._ASSIGN_CACHE /
-#: dedup._shingles_staged; at cluster scale this becomes a staged table
-#: or reliable checkpoint instead of localCheckpoint. Without it every
-#: consumer re-runs the orderkey self-join + distinct — by far the
-#: heaviest stage of either graph query.
-_EDGES_CACHE: dict[int, tuple] = {}
-
-
 def _edges_staged(lineitem: DataFrame) -> DataFrame:
-    key = id(lineitem)
-    hit = _EDGES_CACHE.get(key)
-    if hit is None:
-        hit = (
-            lineitem,
-            copurchase_edges(lineitem).localCheckpoint(eager=True),
-        )
-        _EDGES_CACHE[key] = hit
-    return hit[1]
+    """Distinct directed co-purchase edge list, session-staged — shared
+    by PageRank (both edge directions) and triangle counting (the a<b
+    orientation is a cheap filter of the stage). At cluster scale this
+    becomes a staged table or reliable checkpoint instead of
+    localCheckpoint. Without it every consumer re-runs the orderkey
+    self-join + distinct — by far the heaviest stage of either graph
+    query."""
+    return _stage(
+        "graph_edges",
+        lineitem,
+        (),
+        lambda: copurchase_edges(lineitem).localCheckpoint(eager=True),
+    )
 
 
 def pagerank_products(
@@ -291,25 +286,19 @@ def _triangles(
     ).select("u", "v", "w")
 
 
-#: staged triangle list per lineitem identity — the wedge-closure
-#: join is the heaviest graph stage after edge construction, and BOTH
-#: `graph_triangles` and `graph_ktruss` consume its output; staging it
-#: (like _EDGES_CACHE / _PIVOT_BFS_CACHE) makes the second consumer in
-#: a session pay only an explode + agg.
-_TRIS_CACHE: dict[int, tuple] = {}
-
-
 def _triangles_staged(lineitem: DataFrame) -> DataFrame:
-    key = id(lineitem)
-    hit = _TRIS_CACHE.get(key)
-    if hit is None:
-        und = _edges_staged(lineitem).filter(F.col("a") < F.col("b"))
-        hit = (
-            lineitem,
-            _triangles(und).localCheckpoint(eager=True),
-        )
-        _TRIS_CACHE[key] = hit
-    return hit[1]
+    """Staged triangle list — the wedge-closure join is the heaviest
+    graph stage after edge construction, and BOTH `graph_triangles` and
+    `graph_ktruss` consume its output; staging it makes the second
+    consumer in a session pay only an explode + agg."""
+    return _stage(
+        "graph_triangles",
+        lineitem,
+        (),
+        lambda: _triangles(
+            _edges_staged(lineitem).filter(F.col("a") < F.col("b"))
+        ).localCheckpoint(eager=True),
+    )
 
 
 def triangle_counts(lineitem: DataFrame) -> DataFrame:
@@ -671,48 +660,39 @@ def recommended_pivots(n_nodes: int) -> int:
     return max(4, math.ceil(4 * math.log2(n_nodes)))
 
 
-#: pivot-BFS state per (lineitem identity, pivots, hops) — the
-#: (s, node, dist, sigma) table shared by betweenness, closeness/
-#: harmonic centrality, and the diameter estimate, session-staged so
-#: the forward supersteps run once per session (same convention and
-#: id-reuse guard as _EDGES_CACHE / _lpa_labels_staged).
-_PIVOT_BFS_CACHE: dict[tuple[int, int, int], tuple] = {}
-
-
 def _pivot_bfs_staged(
     lineitem: DataFrame, pivots: int, hops: int
 ) -> DataFrame:
-    key = (id(lineitem), pivots, hops)
-    hit = _PIVOT_BFS_CACHE.get(key)
-    if hit is None:
-        hit = (lineitem, _pivot_bfs(lineitem, pivots, hops))
-        _PIVOT_BFS_CACHE[key] = hit
-    return hit[1]
-
-
-#: final node-grain betweenness score table per (lineitem identity,
-#: pivots, hops) — the BACKWARD Brandes accumulation is also shared
-#: (r5 verdict #1): `graph_betweenness` and the stability eval's set
-#: A are the same estimator run, so the delta accumulation runs once
-#: per session instead of once per consumer. Holds the parent
-#: DataFrame ref (id-reuse guard, same convention as the BFS cache).
-_BETWEENNESS_CACHE: dict[tuple[int, int, int], tuple] = {}
+    """Pivot-BFS state per (pivots, hops) — the (s, node, dist, sigma)
+    table shared by betweenness, closeness/harmonic centrality, and the
+    diameter estimate, session-staged so the forward supersteps run
+    once per session."""
+    return _stage(
+        "graph_pivot_bfs",
+        lineitem,
+        (pivots, hops),
+        lambda: _pivot_bfs(lineitem, pivots, hops),
+    )
 
 
 def _betweenness_staged(
     lineitem: DataFrame, pivots: int, hops: int
 ) -> DataFrame:
-    key = (id(lineitem), pivots, hops)
-    hit = _BETWEENNESS_CACHE.get(key)
-    if hit is None:
-        tbl = _betweenness_from_bfs(
+    """Final node-grain betweenness score table per (pivots, hops) —
+    the BACKWARD Brandes accumulation is also shared (r5 verdict #1):
+    `graph_betweenness` and the stability eval's set A are the same
+    estimator run, so the delta accumulation runs once per session
+    instead of once per consumer."""
+    return _stage(
+        "graph_betweenness",
+        lineitem,
+        (pivots, hops),
+        lambda: _betweenness_from_bfs(
             _edges_staged(lineitem),
             _pivot_bfs_staged(lineitem, pivots, hops),
             hops,
-        ).localCheckpoint(eager=True)
-        hit = (lineitem, tbl)
-        _BETWEENNESS_CACHE[key] = hit
-    return hit[1]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _pivot_bfs(
@@ -1316,22 +1296,22 @@ def lpa_communities(
     )
 
 
-#: final LPA label table, session-staged by (lineitem identity,
-#: iterations) — shared by `lpa_communities` and
-#: `community_modularity` so the propagation supersteps run ONCE per
-#: session (the modularity eval used to pay for them twice, ~6 s at
-#: sf0.1). Holds the lineitem ref against id reuse, same as
-#: _EDGES_CACHE / loaders._tuned_sessions.
-_LPA_CACHE: dict[tuple[int, int], tuple] = {}
-
-
 def _lpa_labels_staged(
     lineitem: DataFrame, iterations: int = LPA_ITERATIONS
 ) -> DataFrame:
-    key = (id(lineitem), iterations)
-    hit = _LPA_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
+    """Final LPA label table, session-staged per iterations — shared by
+    `lpa_communities` and `community_modularity` so the propagation
+    supersteps run ONCE per session (the modularity eval used to pay
+    for them twice, ~6 s at sf0.1)."""
+    return _stage(
+        "graph_lpa_labels",
+        lineitem,
+        iterations,
+        lambda: _lpa_labels(lineitem, iterations),
+    )
+
+
+def _lpa_labels(lineitem: DataFrame, iterations: int) -> DataFrame:
     edges = _edges_staged(lineitem)
     labels = (
         edges.select(F.col("a").alias("node"))
@@ -1361,9 +1341,7 @@ def _lpa_labels_staged(
                 ),
             )
         )
-    labels = labels.localCheckpoint(eager=True)
-    _LPA_CACHE[key] = (lineitem, labels)
-    return labels
+    return labels.localCheckpoint(eager=True)
 
 
 def oracle_lpa_communities(iterations: int = LPA_ITERATIONS) -> str:
@@ -1416,7 +1394,7 @@ lpa_communities AS (
 SIM_TOP_K = 5
 
 
-#: basket-bounded co-occurrence pipeline per lineitem identity, session
+#: basket-bounded co-occurrence pipeline per lineitem, session
 #: staged (r10, guide §2.4): `item_similarity` and
 #: `rec_coverage_diversity` each rebuilt the identical distinct
 #: (order, part) self-join + pair agg + degree joins — the captured
@@ -1424,23 +1402,21 @@ SIM_TOP_K = 5
 #: lines). One eager checkpoint of the scored pair table (co-occurring
 #: pair grain, the same table the DuckDB oracle MATERIALIZEs) plus the
 #: part-grain degree table serves every consumer.
-_COOC_CACHE: dict = {}
-
-
 def _cooc_staged(lineitem: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ords, scored): part order-frequencies and the scored
     co-occurring pair table (p < q, n_common, na, nb, jaccard)."""
-    from ._staging import stage as _stage_h
-
     op = lineitem.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
     ).distinct()
-    ords = _stage_h(
-        _COOC_CACHE,
-        ("ords", id(lineitem)),
+    ords = _stage(
+        "graph_cooc_ords",
         lineitem,
-        lambda: op.groupBy("p").agg(F.count("*").alias("n_ord")),
+        (),
+        lambda: op.groupBy("p")
+        .agg(F.count("*").alias("n_ord"))
+        .localCheckpoint(eager=True),
     )
+
     def _build_scored() -> DataFrame:
         pairs = (
             op.join(
@@ -1468,11 +1444,10 @@ def _cooc_staged(lineitem: DataFrame) -> tuple[DataFrame, DataFrame]:
                     6,
                 ),
             )
+            .localCheckpoint(eager=True)
         )
 
-    scored = _stage_h(
-        _COOC_CACHE, ("scored", id(lineitem)), lineitem, _build_scored
-    )
+    scored = _stage("graph_cooc_scored", lineitem, (), _build_scored)
     return ords, scored
 
 

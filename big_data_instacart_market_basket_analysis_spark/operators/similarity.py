@@ -35,7 +35,6 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._staging import STAGING_LOCK as _STAGING_LOCK
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 
@@ -79,21 +78,19 @@ def _cosine_pre(a: str, b: str, na: str, nb: str) -> F.Column:
     return F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb))
 
 
-#: exact top-k ground truth per (embedding identity, n_queries, k),
-#: session-staged: EIGHT recall/eval queries re-derive the same
-#: brute-force baseline — the betweenness/DBSCAN staging convention
-#: applied to the ANN family's shared truth table.
-_BRUTE_CACHE: dict[tuple, tuple] = {}
-
-
 def _brute_topk_staged(
     emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
+    """Exact top-k ground truth per (n_queries, k), session-staged:
+    EIGHT recall/eval queries re-derive the same brute-force
+    baseline."""
     return _stage(
-        _BRUTE_CACHE,
-        (id(emb), n_queries, k),
+        "similarity_brute_topk",
         emb,
-        lambda: brute_force_topk(emb, n_queries, k),
+        (n_queries, k),
+        lambda: brute_force_topk(emb, n_queries, k).localCheckpoint(
+            eager=True
+        ),
     )
 
 
@@ -366,28 +363,20 @@ def _nearest_centroids(vecs: DataFrame, cents: DataFrame,
     )
 
 
-#: rank-1 cell assignment per corpus DataFrame, session-staged — shared
-#: by IVF search, the diversity sampler, and SemDeDup (the same staging
-#: convention as dedup._shingles_staged; at cluster scale this becomes
-#: a staged table / reliable checkpoint instead of localCheckpoint).
-_ASSIGN_CACHE: dict[int, tuple] = {}
-
-
 def _assignment_staged(emb: DataFrame) -> DataFrame:
-    key = id(emb)
-    with _STAGING_LOCK:
-        hit = _ASSIGN_CACHE.get(key)
-        if hit is None or hit[0] is not emb:
-            vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
-            cents = _ivf_centroids(emb)
-            hit = (
-                emb,
-                _nearest_centroids(vecs, cents, 1).localCheckpoint(
-                    eager=True
-                ),
-            )
-            _ASSIGN_CACHE[key] = hit
-        return hit[1]
+    """Rank-1 cell assignment, session-staged — shared by IVF search,
+    the diversity sampler, and SemDeDup (at cluster scale this becomes
+    a staged table / reliable checkpoint instead of localCheckpoint)."""
+    return _stage(
+        "similarity_assignment",
+        emb,
+        (),
+        lambda: _nearest_centroids(
+            emb.select("vec_id", _as_double("embedding").alias("v")),
+            _ivf_centroids(emb),
+            1,
+        ).localCheckpoint(eager=True),
+    )
 
 
 def ivf_ann_topk(emb: DataFrame, n_queries: int = N_QUERIES,
@@ -1901,34 +1890,28 @@ def _pq_codebook_rows(emb: DataFrame) -> dict:
     return cents_by_sub
 
 
-#: trained codebook + encoded corpus per embedding identity, session-
-#: staged: `ann_pq` and `ann_pq_recall` each trained the identical
-#: deterministic codebook and re-encoded the corpus per call (r10 —
-#: the `_assignment_staged` convention; at 100 TB the codes table IS
-#: the persisted index, built once beside the raw vectors).
-_PQ_INDEX_CACHE: dict[int, tuple] = {}
-
-
 def _pq_index_staged(emb: DataFrame) -> tuple:
     """(cents_by_sub, codes): codes = (neighbor_id, sub, cid), eagerly
-    checkpointed (vec x M grain, three small ints per row)."""
-    key = id(emb)
-    with _STAGING_LOCK:
-        hit = _PQ_INDEX_CACHE.get(key)
-        if hit is None or hit[0] is not emb:
-            cents_by_sub = _pq_codebook_rows(emb)
-            codes = (
-                _pq_subvectors(emb)
-                .select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    "sub",
-                    (_pq_key_lit(cents_by_sub) % 256).alias("cid"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            hit = (emb, cents_by_sub, codes)
-            _PQ_INDEX_CACHE[key] = hit
-        return hit[1], hit[2]
+    checkpointed (vec x M grain, three small ints per row). Staged:
+    `ann_pq` and `ann_pq_recall` each trained the identical
+    deterministic codebook and re-encoded the corpus per call (r10; at
+    100 TB the codes table IS the persisted index, built once beside
+    the raw vectors)."""
+    return _stage("similarity_pq_index", emb, (), lambda: _pq_index(emb))
+
+
+def _pq_index(emb: DataFrame) -> tuple:
+    cents_by_sub = _pq_codebook_rows(emb)
+    codes = (
+        _pq_subvectors(emb)
+        .select(
+            F.col("vec_id").alias("neighbor_id"),
+            "sub",
+            (_pq_key_lit(cents_by_sub) % 256).alias("cid"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    return cents_by_sub, codes
 
 
 def pq_ann_topk(
@@ -2957,13 +2940,14 @@ GANN_NODE_DEGREE = 6
 GANN_NODE_ROUNDS = 3
 GANN_BEAM = 12
 
-#: staged graph index per corpus DataFrame identity: (corpus ref,
-#: node-layer edges, centroid layer). Same convention as
-#: _ASSIGN_CACHE — the ref in the value prevents id-reuse aliasing.
-_GANN_CACHE: dict[int, tuple] = {}
-
-
 def _gann_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The staged graph index: (node-layer edges, centroid layer)."""
+    return _stage(
+        "similarity_gann_index", emb, (), lambda: _gann_index_build(emb)
+    )
+
+
+def _gann_index_build(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Build (edges, cents) for the two-layer navigable graph.
 
     Node layer: each vector points at its ``GANN_NODE_DEGREE`` nearest
@@ -2981,10 +2965,6 @@ def _gann_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     keeps HNSW's query-time character (greedy coarse descent, then
     local expansion) with a fully declarative, bounded-round build.
     """
-    key = id(emb)
-    hit = _GANN_CACHE.get(key)
-    if hit is not None and hit[0] is emb:
-        return hit[1], hit[2]
     asn = _assignment_staged(emb)  # vec_id, v, centroid_id
     a = asn.select(
         "centroid_id", F.col("vec_id").alias("src"), F.col("v").alias("av")
@@ -3032,18 +3012,7 @@ def _gann_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cents = cents.localCheckpoint(eager=True)
-    _GANN_CACHE[key] = (emb, edges, cents)
-    return edges, cents
-
-
-#: staged beam-search RESULT per (embedding identity, n_queries, k):
-#: FOUR consumers re-run the identical 3+3-round search per call —
-#: `ann_graph_beam`, `graph_ann_recall`, `retrieval_eval_report`, and
-#: the lint's plan build — the same shared-truth situation
-#: `_brute_topk_staged` solves for the brute-force baseline (r9,
-#: guide §1.2). The result is n_queries x k rows.
-_GANN_TOPK_CACHE: dict[tuple, tuple] = {}
+    return edges, cents.localCheckpoint(eager=True)
 
 
 def graph_ann_topk(
@@ -3051,18 +3020,19 @@ def graph_ann_topk(
 ) -> DataFrame:
     """Session-staged `graph_ann_topk_plan` result (see that docstring
     for the search itself); the per-round checkpointed supersteps run
-    once per (embedding identity, n_queries, k) and every consumer
-    reads the materialized n_queries x k table."""
-    key = (id(emb), n_queries, k)
-    with _STAGING_LOCK:
-        hit = _GANN_TOPK_CACHE.get(key)
-        if hit is not None and hit[0] is emb:
-            return hit[1]
-        res = graph_ann_topk_plan(emb, n_queries, k).localCheckpoint(
+    once per (embedding, n_queries, k) and every consumer reads the
+    materialized n_queries x k table. FOUR consumers re-ran the
+    identical 3+3-round search per call — `ann_graph_beam`,
+    `graph_ann_recall`, `retrieval_eval_report`, and the lint's plan
+    build (r9, guide §1.2)."""
+    return _stage(
+        "similarity_gann_topk",
+        emb,
+        (n_queries, k),
+        lambda: graph_ann_topk_plan(emb, n_queries, k).localCheckpoint(
             eager=True
-        )
-        _GANN_TOPK_CACHE[key] = (emb, res)
-        return res
+        ),
+    )
 
 
 def graph_ann_topk_plan(

@@ -2173,22 +2173,18 @@ bigram_logprob AS (
 """
 
 
-#: NB scored table per docs identity — seven consumers (the declared
-#: quality query plus AUC / calibration / PR / scorecard / gains /
-#: decomposition) each re-ran the full train-plus-score pipeline;
-#: the staged table materializes it once per session (r10; same
-#: convention as the co-occurrence and GANN staging — the bench line
+#: NB scored table per docs — seven consumers (the declared quality
+#: query plus AUC / calibration / PR / scorecard / gains /
+#: decomposition) each re-ran the full train-plus-score pipeline; the
+#: staged table materializes it once per session (r10; the bench line
 #: that first touches it carries the build, see OPTIMIZATION_r10.md).
-_NB_SCORED_CACHE: dict[tuple, tuple] = {}
-
-
 def nb_quality_scores(docs: DataFrame) -> DataFrame:
     """Session-staged NB score table (see ``_nb_scores_build``)."""
     return _stage(
-        _NB_SCORED_CACHE,
-        ("nb_scored", id(docs)),
+        "textstats_nb_scored",
         docs,
-        lambda: _nb_scores_build(docs),
+        (),
+        lambda: _nb_scores_build(docs).localCheckpoint(eager=True),
     )
 
 
@@ -2866,19 +2862,15 @@ rake_keywords AS (
 BPE_MERGES = 6
 
 
-#: learned merge lists per (docs identity, n_merges) — the trained
-#: tokenizer artifact is session state shared by the train query and
-#: the encode/fertility query (r8; the stage convention, list-valued).
-_BPE_MERGES_CACHE: dict[tuple, tuple] = {}
-
-
+#: learned merge lists per (docs, n_merges) — the trained tokenizer
+#: artifact is session state shared by the train query and the
+#: encode/fertility query (r8).
 def _bpe_learn_staged(docs: DataFrame, n_merges: int) -> list:
     return _stage(
-        _BPE_MERGES_CACHE,
-        (id(docs), n_merges),
+        "textstats_bpe_merges",
         docs,
+        n_merges,
         lambda: _bpe_learn(docs, n_merges),
-        checkpoint=False,
     )
 
 
@@ -4353,19 +4345,16 @@ def rouge_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-#: pair-grain n-gram overlap base per docs identity — ROUGE and BLEU
-#: each rebuilt the identical tokenize/count/overlap pipeline (r10;
-#: carrier note in OPTIMIZATION_r10.md).
-_PAIR_NGRAM_CACHE: dict[tuple, tuple] = {}
-
-
+#: pair-grain n-gram overlap base per docs — ROUGE and BLEU each
+#: rebuilt the identical tokenize/count/overlap pipeline (r10; carrier
+#: note in OPTIMIZATION_r10.md).
 def _pair_ngram_base(docs: DataFrame) -> DataFrame:
     """Session-staged pair n-gram base (see ``_pair_ngram_build``)."""
     return _stage(
-        _PAIR_NGRAM_CACHE,
-        ("pair_ngram", id(docs)),
+        "textstats_pair_ngram",
         docs,
-        lambda: _pair_ngram_build(docs),
+        (),
+        lambda: _pair_ngram_build(docs).localCheckpoint(eager=True),
     )
 
 
@@ -6233,12 +6222,6 @@ UNIGRAM_ROUNDS = 2
 
 _UNIGRAM_WORD_RE = f"^[a-z0-9]{{1,{UNIGRAM_WORD_MAX}}}$"
 
-#: trained inventories per (docs identity, params): list of
-#: (piece, cnt) for the FINAL round plus the final total — the
-#: artifact shared by the train query and the fertility query.
-_UNIGRAM_CACHE: dict[tuple, tuple] = {}
-
-
 def _unigram_words(docs: DataFrame) -> DataFrame:
     """Distinct-word vocabulary with frequency (the only corpus-sized
     stage of the whole trainer — everything after runs on word types)."""
@@ -6395,13 +6378,14 @@ def _unigram_learn(docs: DataFrame) -> tuple:
 
 
 def _unigram_learn_staged(docs: DataFrame) -> tuple:
+    """Trained inventory per (docs, params): list of (piece, cnt) for
+    the FINAL round plus the final total — the artifact shared by the
+    train query and the fertility query."""
     return _stage(
-        _UNIGRAM_CACHE,
-        (id(docs), UNIGRAM_SEED_MULTI, UNIGRAM_KEEP_MULTI,
-         UNIGRAM_ROUNDS),
+        "textstats_unigram",
         docs,
+        (UNIGRAM_SEED_MULTI, UNIGRAM_KEEP_MULTI, UNIGRAM_ROUNDS),
         lambda: _unigram_learn(docs),
-        checkpoint=False,
     )
 
 

@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._staging import STAGING_LOCK as _STAGING_LOCK
 from ._staging import stage as _stage
 
 TREE_BINS = 16
@@ -77,13 +76,9 @@ def _user_features(events: DataFrame) -> DataFrame:
     )
 
 
-def _binned(events: DataFrame) -> DataFrame:
+def _binned_from_feats(feats: DataFrame) -> DataFrame:
     """(user_id, label, fid, bin): melted features mapped to equi-width
     integer bins from the global per-feature min/max."""
-    return _binned_from_feats(_user_features(events))
-
-
-def _binned_from_feats(feats: DataFrame) -> DataFrame:
     melt = feats.select(
         "user_id",
         "label",
@@ -110,25 +105,20 @@ def _binned_from_feats(feats: DataFrame) -> DataFrame:
     )
 
 
-#: per-input staged (user_features, binned) pair: Catalyst does not
-#: dedupe common subplans, and the tree trainers reference these
-#: user-grain tables up to ~12 times (4 trees x hist/leaf/OOB) — one
-#: localCheckpoint each turns 12 corpus aggs into 1. Keyed by input
-#: identity with the ref held in the value (the id-reuse-safe cache
-#: convention); at cluster scale this is a staged feature table.
-_FEATS_CACHE: dict[int, tuple] = {}
-
-
 def _staged_feats_binned(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    key = id(events)
-    with _STAGING_LOCK:
-        hit = _FEATS_CACHE.get(key)
-        if hit is None or hit[0] is not events:
-            feats = _user_features(events).localCheckpoint(eager=True)
-            binned = _binned_from_feats(feats).localCheckpoint(eager=True)
-            hit = (events, feats, binned)
-            _FEATS_CACHE[key] = hit
-        return hit[1], hit[2]
+    """Staged (user_features, binned) pair: Catalyst does not dedupe
+    common subplans, and the tree trainers reference these user-grain
+    tables up to ~12 times (4 trees x hist/leaf/OOB) — one
+    localCheckpoint each turns 12 corpus aggs into 1. At cluster scale
+    this is a staged feature table."""
+    return _stage(
+        "trees_feats_binned", events, (), lambda: _feats_binned(events)
+    )
+
+
+def _feats_binned(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    feats = _user_features(events).localCheckpoint(eager=True)
+    return feats, _binned_from_feats(feats).localCheckpoint(eager=True)
 
 
 def _best_split(subset: DataFrame) -> DataFrame:
@@ -178,15 +168,15 @@ def _argmin_split_from_hist(hist: DataFrame) -> DataFrame:
     )
 
 
-#: converged CART model table per input identity (r8): shared by
+#: converged CART model table per input (r8): shared by
 #: `ml_cart_verified` and `cart_feature_importance`, which otherwise
 #: re-runs the full depth-2 split search to read 7 rows.
-_CART_CACHE: dict[int, tuple] = {}
-
-
 def cart_train_staged(events: DataFrame) -> DataFrame:
     return _stage(
-        _CART_CACHE, id(events), events, lambda: cart_train(events)
+        "trees_cart",
+        events,
+        (),
+        lambda: cart_train(events).localCheckpoint(eager=True),
     )
 
 
@@ -486,15 +476,13 @@ def _gb_binned(events: DataFrame):
 #: query re-ran the full driver-coordinated boosting loop — the exact
 #: blind spot the betweenness/dbscan pattern closes. The melted
 #: (user, y, fid, bin) table and the converged 3-row stump table are
-#: each materialized once per input identity; superseded inputs are
-#: evicted (see `_staging.stage`).
-_GB_BINNED_CACHE: dict[int, tuple] = {}
-_GBM_CACHE: dict[tuple, tuple] = {}
-
-
+#: each materialized once per input.
 def _gb_binned_staged(events: DataFrame) -> DataFrame:
     return _stage(
-        _GB_BINNED_CACHE, id(events), events, lambda: _gb_binned(events)
+        "trees_gb_binned",
+        events,
+        (),
+        lambda: _gb_binned(events).localCheckpoint(eager=True),
     )
 
 
@@ -502,10 +490,10 @@ def gbm_train_staged(
     events: DataFrame, rounds: int = GB_ROUNDS
 ) -> DataFrame:
     return _stage(
-        _GBM_CACHE,
-        (id(events), rounds),
+        "trees_gbm",
         events,
-        lambda: gbm_train(events, rounds),
+        rounds,
+        lambda: gbm_train(events, rounds).localCheckpoint(eager=True),
     )
 
 
@@ -944,29 +932,6 @@ RF_TREES = 4
 #: P(2)=.26 vs Poisson(1)'s .368/.368/.264. Weights RIDE ALONG as a
 #: column (the scale-correct bootstrap: no row resampling shuffle).
 RF_W0, RF_W1 = 37, 74
-
-
-def _rf_weight(tree: int) -> F.Column:
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"rf:{tree}:"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
-    return (
-        F.when(h < RF_W0, 0).when(h < RF_W1, 1).otherwise(2)
-    ).cast("bigint")
 
 
 def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:

@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._staging import stage
 from ..sources.loaders import load_table
 
 EVAL_PRIOR, EVAL_TRAIN, EVAL_TEST = 0, 1, 2
@@ -130,14 +131,7 @@ def _products_view(part: DataFrame) -> DataFrame:
     )
 
 
-#: memoized per (session, sf_dir) so every query in a session shares ONE
-#: persisted orders view instead of stacking duplicate cache entries.
-_TABLE_CACHE: dict[tuple[int, str], InstacartTables] = {}
-
-
-def instacart_tables(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> InstacartTables:
+def instacart_tables(spark: SparkSession, sf_dir: str) -> InstacartTables:
     """Build (or reuse) the Instacart-shaped views.
 
     The orders view carries two window functions (order_number,
@@ -150,26 +144,26 @@ def instacart_tables(
     standard "stage the enriched dim" call a 100 TB deployment would
     make (or materialize to parquet in an ETL step — same idea, this is
     the in-session form). The fact table (order_products) is never
-    cached.
+    cached. The persisted tables are staged per (session, sf_dir), so
+    every query in a session shares ONE persisted orders view instead
+    of stacking duplicate cache entries.
     """
-    key = (id(spark), sf_dir)
-    if persist and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    orders = _orders_view(load_table(spark, sf_dir, "orders"))
-    if persist:
-        from pyspark import StorageLevel
+    return stage(
+        "instacart_tables", spark, sf_dir, lambda: _tables(spark, sf_dir)
+    )
 
-        orders = orders.persist(StorageLevel.MEMORY_AND_DISK)
-    tables = InstacartTables(
-        orders=orders,
+
+def _tables(spark: SparkSession, sf_dir: str) -> InstacartTables:
+    from pyspark import StorageLevel
+
+    orders = _orders_view(load_table(spark, sf_dir, "orders"))
+    return InstacartTables(
+        orders=orders.persist(StorageLevel.MEMORY_AND_DISK),
         order_products=_order_products_view(
             load_table(spark, sf_dir, "lineitem")
         ),
         products=_products_view(load_table(spark, sf_dir, "part")),
     )
-    if persist:
-        _TABLE_CACHE[key] = tables
-    return tables
 
 
 # ---------------------------------------------------------------------------

@@ -22,10 +22,11 @@ item 1).
   driver processes (or sequential sessions in one process) each get an
   isolated directory and can never tear each other's reads.
 
-Write-once-per-session contract: each ingest module keys a module-level
-cache on ``(id(spark), sf_dir)`` and performs its ``mode("overwrite")``
-write only on first touch, so within one session the staging path is
-written exactly once and every later call returns the cached reader.
+Write-once-per-session contract: each ingest module stages its
+round-trip per (session, sf_dir) (``operators._staging.stage``) and
+performs its ``mode("overwrite")`` write only on first touch, so within
+one session the staging path is written exactly once and every later
+call returns the staged reader.
 The app-id suffix is what makes that contract safe ACROSS sessions.
 """
 

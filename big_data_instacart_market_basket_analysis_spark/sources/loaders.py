@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators._staging import stage
+
 TABLES = (
     "region",
     "nation",
@@ -62,11 +64,6 @@ _RUNTIME_DEFAULTS = (
 
 _SHUFFLE_STOCK_DEFAULT = "200"
 
-# id -> the session object itself. Holding the reference (not a bare
-# id) means a GC'd session's recycled id can never alias a new session
-# and silently skip tuning (same pattern as dedup._SHINGLE_CACHE).
-_tuned_sessions: dict[int, SparkSession] = {}
-
 
 def ensure_session_defaults(spark: SparkSession) -> None:
     """Apply the engine's runtime-settable defaults to *any* session.
@@ -74,13 +71,14 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     Queries must be correct (and reasonably fast) on whatever session
     is handed to them, so the engine's semantic confs are set here at
     runtime rather than relying on our own ``get_spark()`` builder.
-    Idempotent and memoized per session; each conf is individually
+    Idempotent and staged per session; each conf is individually
     best-effort so an unrecognized knob on some future Spark can never
     take a query down.
     """
-    key = id(spark)
-    if _tuned_sessions.get(key) is spark:
-        return
+    stage("session_defaults", spark, (), lambda: _apply_defaults(spark))
+
+
+def _apply_defaults(spark: SparkSession) -> None:
     for conf, value in _RUNTIME_DEFAULTS:
         try:
             # NB: conf.get validates the *default* argument's type on
@@ -111,7 +109,6 @@ def ensure_session_defaults(spark: SparkSession) -> None:
             spark.conf.set("spark.sql.shuffle.partitions", cpus)
     except Exception:
         pass
-    _tuned_sessions[key] = spark
 
 
 def ensure_nanos_conf(spark: SparkSession) -> None:
@@ -119,31 +116,30 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     ensure_session_defaults(spark)
 
 
-# (session, sf_dir, table) -> (session ref, DataFrame). A bare
-# spark.read.parquet costs ~70-90 ms of driver-side metadata work
-# (file listing + footer schema inference) EVERY call; the entry
-# module alone has 300+ load_table sites, so an unmemoized loader
-# spends tens of seconds per bench pass re-resolving ten immutable
-# fixture files (guide §6: file listing/planning is driver-side,
-# single-process work). The DataFrame handle is lazy — nothing is
-# computed or cached data-wise — and memoizing also makes the handle
-# identity stable, so the operators' id()-keyed session staging hits
-# across every call site instead of only the `_read_once` ones.
-# Holding the session reference guards against CPython id() reuse
-# (same convention as `_tuned_sessions`).
-_TABLE_HANDLE_CACHE: dict[tuple[int, str, str], tuple] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_HANDLE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    """The fixture table's DataFrame handle, staged per (session,
+    sf_dir, name). A bare spark.read.parquet costs ~70-90 ms of
+    driver-side metadata work (file listing + footer schema inference)
+    EVERY call; the entry module alone has 300+ load_table sites, so an
+    unstaged loader spends tens of seconds per bench pass re-resolving
+    ten immutable fixture files (guide §6: file listing/planning is
+    driver-side, single-process work). The handle is lazy — nothing is
+    computed or cached data-wise — and staging also makes the handle
+    identity stable, so the operators' input-owned staging hits across
+    every call site."""
+    return stage(
+        "table_handles",
+        spark,
+        (sf_dir, name),
+        lambda: _read(spark, sf_dir, name),
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_defaults(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
-    _TABLE_HANDLE_CACHE[key] = (spark, df)
     return df
 
 

@@ -19,10 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators._staging import stage
 from ._scratch import roundtrip_path
 from .loaders import load_table
-
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 _COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
@@ -33,19 +32,25 @@ def events_orc_roundtrip(
     tmp_base: str | None = None,
 ) -> DataFrame:
     """Write-once-per-session contract: the staging write happens on
-    first touch per (session, sf_dir) — ``_ROUNDTRIP_CACHE`` returns
+    first touch per (session, sf_dir) — ``stage`` returns
     the same lazy reader afterwards — and the staging dir is
     per-application (see ``_scratch.scratch_dir``), so concurrent
     drivers can never overwrite files under each other's readers."""
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    return stage(
+        "orc_roundtrip",
+        spark,
+        sf_dir,
+        lambda: _events_orc_roundtrip(spark, sf_dir, tmp_base),
+    )
+
+
+def _events_orc_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(*_COLS)
     path = roundtrip_path(spark, "orc", sf_dir, "events", tmp_base)
     events.write.mode("overwrite").orc(path)
-    df = spark.read.schema(events.schema).orc(path).select(*_COLS)
-    _ROUNDTRIP_CACHE[key] = df
-    return df
+    return spark.read.schema(events.schema).orc(path).select(*_COLS)
 
 
 ORACLE_EVENTS_ORC_ROUNDTRIP = """

@@ -246,11 +246,6 @@ def register_sink(spark) -> None:
     spark.dataSource.register(JsonLinesSinkDataSource)
 
 
-#: one sink round-trip per (session, sf_dir) — same staging rationale
-#: as the csv/json/text ingest caches.
-_SINK_ROUNDTRIP_CACHE: dict[tuple[int, str], object] = {}
-
-
 def docs_pysink_roundtrip(
     spark,
     sf_dir: str,
@@ -260,12 +255,21 @@ def docs_pysink_roundtrip(
     (two-phase task commit), then re-read the published files with a
     pinned schema — output hash-equals the parquet table, proving the
     write path is lossless and the commit protocol publishes exactly
-    the committed files."""
+    the committed files. Staged per (session, sf_dir), like the ingest
+    round-trips."""
+    from ..operators._staging import stage
+
+    return stage(
+        "pysink_roundtrip",
+        spark,
+        sf_dir,
+        lambda: _docs_pysink_roundtrip(spark, sf_dir, tmp_base),
+    )
+
+
+def _docs_pysink_roundtrip(spark, sf_dir: str, tmp_base: str | None):
     from .loaders import load_table
 
-    key = (id(spark), sf_dir)
-    if key in _SINK_ROUNDTRIP_CACHE:
-        return _SINK_ROUNDTRIP_CACHE[key]
     register_sink(spark)
     docs = load_table(spark, sf_dir, "documents")
     from ._scratch import roundtrip_path
@@ -280,12 +284,10 @@ def docs_pysink_roundtrip(
         .option("path", path)
         .save()
     )
-    df = spark.read.schema(
+    return spark.read.schema(
         "doc_id bigint, text string, lang string, source string,"
         " n_chars bigint"
     ).json(f"{path}/part-*.jsonl")
-    _SINK_ROUNDTRIP_CACHE[key] = df
-    return df
 
 
 ORACLE_DOCS_PYSINK_ROUNDTRIP = """

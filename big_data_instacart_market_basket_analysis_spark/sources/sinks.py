@@ -2,8 +2,8 @@
 
 The reference's only sinks are driver-side ``print`` of a pandas table
 (F.py:318, 357, 396) and printed metrics (F.py:252-276). The engine
-replaces them with distributed writers; the console path stays as
-``df.show()`` for parity.
+replaces them with distributed writers; the console path is plain
+``df.show()``.
 
 Scale rules baked in:
 
@@ -61,12 +61,6 @@ def write_csv(
     ).csv(path)
 
 
-def write_json(
-    df: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    df.write.mode(mode).json(path)
-
-
 def write_orc(
     df: DataFrame,
     path: str,
@@ -104,11 +98,6 @@ def write_bucketed(
         .sortBy(*bucket_cols)
         .saveAsTable(table)
     )
-
-
-def show_console(df: DataFrame, n: int = 20) -> None:
-    """S9 parity sink (F.py:318): driver console, bounded rows."""
-    df.show(n, truncate=False)
 
 
 def upsert_partitions(

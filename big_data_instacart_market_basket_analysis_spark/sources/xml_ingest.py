@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators._staging import stage
 from .loaders import load_table
 
 EVENTS_XML_SCHEMA = T.StructType(
@@ -32,17 +33,22 @@ EVENTS_XML_SCHEMA = T.StructType(
     ]
 )
 
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def events_xml_roundtrip(
     spark: SparkSession,
     sf_dir: str,
     tmp_base: str | None = None,
 ) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    return stage(
+        "xml_roundtrip",
+        spark,
+        sf_dir,
+        lambda: _events_xml_roundtrip(spark, sf_dir, tmp_base),
+    )
+
+
+def _events_xml_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_millis("ts").alias("ts_ms"),
@@ -62,14 +68,12 @@ def events_xml_roundtrip(
         .option("rowTag", "event")
         .save(path)
     )
-    df = (
+    return (
         spark.read.schema(EVENTS_XML_SCHEMA)
         .format("xml")
         .option("rowTag", "event")
         .load(path)
     )
-    _ROUNDTRIP_CACHE[key] = df
-    return df
 
 
 ORACLE_EVENTS_XML_ROUNDTRIP = """

@@ -15,6 +15,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from big_data_instacart_market_basket_analysis_spark.operators import _staging
 from big_data_instacart_market_basket_analysis_spark.sources.loaders import (
     ensure_session_defaults,
     load_table,
@@ -55,16 +56,17 @@ def test_normalize_event_ts_handles_all_encodings(spark):
     assert out.first()["ts"] == dt.datetime(2024, 1, 2, 3, 4, 5)
 
 
+def _tuned() -> dict:
+    """The session-defaults memo: {(id(session), ()): (session, None)}."""
+    return _staging._REGISTRY.setdefault("session_defaults", {})
+
+
 def test_ensure_session_defaults_applies_semantic_confs(spark):
     # simulate a stock session: flip the semantic confs away from the
     # engine defaults, then re-apply.
-    from big_data_instacart_market_basket_analysis_spark.sources import (
-        loaders as L,
-    )
-
     spark.conf.set("spark.sql.ansi.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
-    L._tuned_sessions.pop(id(spark), None)
+    _tuned().pop((id(spark), ()), None)
     try:
         ensure_session_defaults(spark)
         assert spark.conf.get("spark.sql.ansi.enabled") == "false"
@@ -72,7 +74,7 @@ def test_ensure_session_defaults_applies_semantic_confs(spark):
         # value must be left alone
         assert spark.conf.get("spark.sql.shuffle.partitions") != "200"
         spark.conf.set("spark.sql.shuffle.partitions", "48")
-        L._tuned_sessions.pop(id(spark), None)
+        _tuned().pop((id(spark), ()), None)
         ensure_session_defaults(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "48"
     finally:
@@ -81,7 +83,7 @@ def test_ensure_session_defaults_applies_semantic_confs(spark):
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
         )
-        L._tuned_sessions.pop(id(spark), None)
+        _tuned().pop((id(spark), ()), None)
 
 
 def test_ensure_session_defaults_survives_id_reuse(spark):
@@ -89,20 +91,16 @@ def test_ensure_session_defaults_survives_id_reuse(spark):
     the memo holds the session object itself, so a stale entry under
     the same id is detected (identity check) and the new session is
     re-tuned rather than silently skipped."""
-    from big_data_instacart_market_basket_analysis_spark.sources import (
-        loaders as L,
-    )
-
     try:
         # simulate id-reuse: some OTHER object's entry sits under this
         # session's id (exactly what a bare set[int] could not detect)
-        L._tuned_sessions[id(spark)] = object()
+        _tuned()[(id(spark), ())] = (object(), None)
         spark.conf.set("spark.sql.ansi.enabled", "true")
         ensure_session_defaults(spark)
         assert spark.conf.get("spark.sql.ansi.enabled") == "false"
-        assert L._tuned_sessions[id(spark)] is spark
+        assert _tuned()[(id(spark), ())][0] is spark
     finally:
-        L._tuned_sessions.pop(id(spark), None)
+        _tuned().pop((id(spark), ()), None)
 
 
 def test_merge_schema_reads_evolving_batches(spark, tmp_path):

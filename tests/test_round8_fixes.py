@@ -9,8 +9,6 @@ Each test pins one fix so it cannot silently regress:
   yield gate UNKNOWN, never PASS, when a drift is flagged.
 - BLEU pair-driven n-frame (ADVICE 2): a reference with <2 tokens
   still yields p2 = 0.0 (candidate-denominator), not a NULL row.
-- staging eviction (ADVICE 3): a new input identity evicts entries
-  owned by superseded inputs.
 - join_order_advisor dominance-count rank (ADVICE 5): same ranking as
   the retired global window, no Window operator in the plan.
 """
@@ -21,7 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_instacart_market_basket_analysis_spark.operators import (
-    _staging,
     basket,
     profiling,
     relational,
@@ -199,27 +196,6 @@ def test_bleu_pair_driven_n_frame(spark):
     r = textstats.rouge_pairs(docs).collect()[0]
     assert r["n2_ref"] == 0 and r["n2_cand"] == 2
     assert r["rouge2_f"] is None
-
-
-def test_staging_evicts_superseded_inputs():
-    """Superseded input generations are evicted (r7 ADVICE 3); since
-    r9 the last TWO generations stay warm (r8 ADVICE 4), so strict
-    single-generation eviction is pinned via ``keep_owners=1``."""
-    cache: dict = {}
-    a, b = object(), object()
-    r1 = _staging.stage(cache, (id(a), 1), a, lambda: "a1", checkpoint=False)
-    r2 = _staging.stage(cache, (id(a), 2), a, lambda: "a2", checkpoint=False)
-    assert r1 == "a1" and r2 == "a2" and len(cache) == 2
-    # warm hit does not rebuild
-    assert _staging.stage(
-        cache, (id(a), 1), a, lambda: "NEW", checkpoint=False
-    ) == "a1"
-    # keep_owners=1: a new owner evicts both of a's entries
-    r3 = _staging.stage(
-        cache, (id(b), 1), b, lambda: "b1", checkpoint=False, keep_owners=1
-    )
-    assert r3 == "b1"
-    assert list(cache) == [(id(b), 1)]
 
 
 def test_join_order_advisor_rank_no_window(spark):

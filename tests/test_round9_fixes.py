@@ -12,8 +12,6 @@
 - yuen empty-group guard (ADVICE 3): with one group absent both
   engines emit zero rows (the pivot's half-populated NULL row is
   dropped).
-- staging keep-2 eviction (ADVICE 4): two inputs used in alternation
-  stay warm; only the third-oldest generation is evicted.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ from pyspark.sql import functions as F
 
 import bench
 from big_data_instacart_market_basket_analysis_spark.operators import (
-    _staging,
     temporal,
 )
 from big_data_instacart_market_basket_analysis_spark.sources._scratch import (
@@ -153,32 +150,6 @@ def test_yuen_both_groups_present_emits_one_row(spark):
     out = temporal.yuen_trimmed_test(events).collect()
     assert len(out) == 1
     assert out[0]["n1"] == 40 and out[0]["n2"] == 40
-
-
-# ---------------------------------------------------------------- staging
-
-
-def test_stage_keeps_two_owner_generations(spark):
-    cache: dict = {}
-    a = spark.range(3)
-    b = spark.range(4)
-    c = spark.range(5)
-    _staging.stage(cache, ("a", 1), a, lambda: a, checkpoint=False)
-    _staging.stage(cache, ("b", 1), b, lambda: b, checkpoint=False)
-    # alternation: A must still be warm after B arrived
-    assert ("a", 1) in cache and ("b", 1) in cache
-    _staging.stage(cache, ("c", 1), c, lambda: c, checkpoint=False)
-    # oldest generation (A) evicted, B + C warm
-    assert ("a", 1) not in cache
-    assert ("b", 1) in cache and ("c", 1) in cache
-
-
-def test_stage_same_owner_variants_all_kept(spark):
-    cache: dict = {}
-    a = spark.range(3)
-    for k in range(5):
-        _staging.stage(cache, ("a", k), a, lambda: a, checkpoint=False)
-    assert len(cache) == 5
 
 
 # ------------------------------------------------- stream conf restore
